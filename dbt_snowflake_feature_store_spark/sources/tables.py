@@ -54,49 +54,69 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 _EVENT_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
-def _footer_ts_cols(path: str) -> set[str] | None:
-    """Column names the parquet footer declares as timestamps (any
-    unit). Returns None when the footer cannot be probed — callers fall
-    back to the static allowlist. One footer read per read_table call:
-    metadata-only, no row data."""
-    try:
-        import glob
+def _is_data_name(name: str) -> bool:
+    """Spark's file-index rule for the entries it reads: names starting
+    with ``.`` or ``_`` are hidden (``_SUCCESS``, ``_spark_metadata``,
+    ``.crc`` files) unless a ``_`` name is a ``col=value`` partition
+    directory (``_fs_dt=2024-01-01``)."""
+    return not (name.startswith(".") or (name.startswith("_") and "=" not in name))
 
+
+def _path_signature(path: str):
+    """(relative name, mtime_ns, size) of every file under ``path``,
+    recursively and in a deterministic order; a single-file path yields
+    its own entry. None when the path is missing or not a local path
+    (object-store URIs): such reads are never cached."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
+        if not os.path.isdir(path):
+            return None
+        entries = []
+        for root, dirs, files in os.walk(path):
+            dirs.sort()  # deterministic walk order
+            rel = os.path.relpath(root, path)
+            for fn in sorted(files):
+                st = os.stat(os.path.join(root, fn))
+                entries.append(
+                    (os.path.join(rel, fn), st.st_mtime_ns, st.st_size)
+                )
+        return tuple(entries)
+    except OSError:
+        return None
+
+
+def _footer_ts_cols(path: str, sig=None) -> set[str] | None:
+    """Column names the parquet footer declares as timestamps (any
+    unit). Probes the first data file of the signature walk, so a
+    partitioned layout (``dt=.../part-*.parquet``) or a streaming sink
+    is probed like a flat directory. Returns None when the footer cannot
+    be probed — callers fall back to the static allowlist.
+    Metadata-only: one footer read, no row data."""
+    try:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         if os.path.isfile(path):
             probe = path
         else:
-            parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
-            if not parts:
-                return None
-            probe = parts[0]
+            sig = _path_signature(path) if sig is None else sig
+            probe = next(
+                os.path.join(path, rel)
+                for rel, _, _ in sig or ()
+                if all(_is_data_name(p) for p in rel.split(os.sep) if p != ".")
+            )
         schema = pq.ParquetFile(probe).schema_arrow
         return {f.name for f in schema if pa.types.is_timestamp(f.type)}
     except Exception:
         return None
 
 
-def normalize_frame(
-    df: DataFrame,
-    path: str | None = None,
-    ns_allowlist: tuple[str, ...] = (),
-    table: str = "?",
+def _normalize(
+    df: DataFrame, footer_ts: set[str] | None, ns_allowlist: tuple[str, ...], table: str
 ) -> DataFrame:
-    """Apply read_table's timestamp-layout normalization to an
-    already-loaded frame: TIMESTAMP_NTZ → session-TZ TIMESTAMP (every
-    column, every table), and bigint columns the parquet footer declares
-    as timestamps (the nanosAsLong layout) → µs-truncated TIMESTAMP.
-    ``path`` enables the footer probe; without it only ``ns_allowlist``
-    repairs bigint-nanos columns. Shared by read_table and the
-    FeatureStore registered-source read path (ADVICE-r13: freshness and
-    model reads must see the same normalized types as every operator)."""
-    ns_cols = set(ns_allowlist)
-    if path is not None:
-        footer_ts = _footer_ts_cols(path)
-        if footer_ts is not None:
-            ns_cols = footer_ts
+    ns_cols = footer_ts if footer_ts is not None else set(ns_allowlist)
     for c, dt in df.dtypes:
         if dt == "timestamp_ntz":  # timestamp[us] layout, any table
             df = df.withColumn(c, F.col(c).cast("timestamp"))
@@ -114,60 +134,144 @@ def normalize_frame(
     return df
 
 
-# (applicationId, session id, path, file signature) → resolved source
-# PLAN. This is a METADATA cache, not a result cache: the cached object
-# is the analyzed DataFrame (logical plan + parquet file index +
-# footer-driven timestamp normalization) — every action against it still
-# scans the parquet inputs. It is the session-scoped equivalent of
-# Spark's own file-listing cache
-# (spark.sql.hive.filesourcePartitionFileCacheSize — the guide-§6
-# posture: re-listing/re-inferring the same immutable source on every
-# operator call is pure driver latency, ~0.1 s per call here, paid
-# inside every benched query). Freshness is guaranteed by the file
-# signature (name, mtime_ns, size of every parquet part, RECURSIVE over
-# subdirectories so a partitioned layout's nested part rewrite changes
-# the key — ADVICE r17): any rewrite of the path produces a new key, so
-# in-session test fixtures that overwrite their tmp tables never see a
-# stale plan. The key carries the SESSION identity (ADVICE r17: the
-# app_id-only key handed a sibling session in the same application a
-# frame bound to another session); the value holds a strong session ref
-# so the id can never be reused while the entry lives. Entries from
-# dead applications are evicted on every lookup (the _PAIR_CACHE
-# discipline).
+def normalize_frame(
+    df: DataFrame,
+    path: str | None = None,
+    ns_allowlist: tuple[str, ...] = (),
+    table: str = "?",
+) -> DataFrame:
+    """Apply read_table's timestamp-layout normalization to an
+    already-loaded frame: TIMESTAMP_NTZ → session-TZ TIMESTAMP (every
+    column, every table), and bigint columns the parquet footer declares
+    as timestamps (the nanosAsLong layout) → µs-truncated TIMESTAMP.
+    ``path`` enables the footer probe; without it only ``ns_allowlist``
+    repairs bigint-nanos columns. Shared by read_table and the
+    FeatureStore registered-source read path (ADVICE-r13: freshness and
+    model reads must see the same normalized types as every operator)."""
+    footer_ts = _footer_ts_cols(path) if path is not None else None
+    return _normalize(df, footer_ts, ns_allowlist, table)
+
+
+# The shared read cache: one schema-inference result per (session,
+# format, options, inference confs, file signature). Inferring a file
+# source's schema costs a Spark job (~70 ms of driver time per read on
+# a 4-core local[4] session); Snowflake takes a table's schema from its
+# catalog, and this is the session-scoped equivalent of that catalog for
+# paths this session has already resolved. It is a METADATA cache, never a result cache:
+# every action still scans the files.
 #
-# Shared-lineage caveat (documented per ADVICE r17): two read_table
-# calls for the same (session, path) return the SAME analyzed frame —
-# identical plan/attribute ids — so an operator joining two reads of
-# one table is a self-join of one plan. That is the CLAUDE.md
-# duplicate-name discipline (select via frame["col"] into fresh names
-# before any expr() referencing them), which every operator already
-# follows for genuinely shared lineage; test_scale_plans pins that the
-# plain `join(..., on="key")` spelling stays resolvable.
-_READ_CACHE: dict[tuple, tuple] = {}
+# Key fields:
+#   * applicationId and id(spark) — a sibling session of the same
+#     application never sees another session's entry; the entry holds a
+#     strong session ref, so the id cannot be reused while it lives;
+#   * format and the sorted reader options;
+#   * the values of every conf that changes what inference returns
+#     (_INFERENCE_CONFS) — toggling one reads as a miss, so types follow
+#     the conf exactly as they would without a cache;
+#   * the recursive file signature (_path_signature: name, mtime_ns and
+#     size of every file, nested partition directories included) — any
+#     rewrite, append or landed batch under the path is a new key.
+# Value: the inferred schema and the parquet footer's timestamp-column
+# probe (_footer_ts_cols), plus read_table's analyzed frame once built.
+#
+# Never cached: Delta reads, paths that are missing or not local (no
+# signature — they take the uncached read and raise exactly as before),
+# and readers with a caller-pinned schema (nothing to infer).
+#
+# What a hit returns: read_cached builds a FRESH frame from the cached
+# schema (reader.schema(...).load(path)), so two store reads of one
+# table never share plan or attribute ids. read_table alone returns its
+# cached analyzed frame for the query keys, so two read_table calls for
+# the same (session, path) ARE one plan: an operator joining two reads
+# of one table is a self-join, handled by the CLAUDE.md duplicate-name
+# discipline (select via frame["col"] into fresh names before any
+# expr()); test_scale_plans pins that `join(..., on="key")` stays
+# resolvable.
+#
+# Eviction, on every insert: entries of other applications, and the
+# superseded entries of the same (session, path, format, options).
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.session.timeZone",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+)
 
 
-def _path_signature(path: str):
-    try:
-        if os.path.isfile(path):
-            st = os.stat(path)
-            return ((os.path.basename(path), st.st_mtime_ns, st.st_size),)
-        entries = []
-        for root, dirs, files in os.walk(path):
-            dirs.sort()  # deterministic walk order
-            rel = os.path.relpath(root, path)
-            for fn in sorted(files):
-                st = os.stat(os.path.join(root, fn))
-                entries.append(
-                    (os.path.join(rel, fn), st.st_mtime_ns, st.st_size)
-                )
-        return tuple(entries)
-    except OSError:
-        return None
+class _Entry:
+    __slots__ = ("spark", "schema", "footer_ts", "frame")
+
+    def __init__(self, spark, schema, footer_ts) -> None:
+        self.spark = spark
+        self.schema = schema
+        self.footer_ts = footer_ts
+        self.frame = None
+
+
+_READ_CACHE: dict[tuple, _Entry] = {}
+
+
+def _resolve(
+    spark: SparkSession, path: str, fmt: str, options: dict
+) -> tuple[_Entry, DataFrame | None]:
+    """The cache entry for one read, inferring on a miss. Returns the
+    frame the inference analyzed on a miss (fresh: use it), None on a
+    hit."""
+    sig = None if fmt == "delta" else _path_signature(path)
+    key = None
+    if sig is not None:
+        key = (
+            spark.sparkContext.applicationId,
+            id(spark),
+            path,
+            fmt,
+            tuple(sorted(options.items())),
+            tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+            sig,
+        )
+        entry = _READ_CACHE.get(key)
+        # the strong ref pins id(spark) against reuse, so a hit is always
+        # this session; the identity check is belt-and-braces
+        if entry is not None and entry.spark is spark:
+            return entry, None
+    df = spark.read.format(fmt).options(**options).load(path)
+    footer_ts = _footer_ts_cols(path, sig) if fmt == "parquet" else None
+    entry = _Entry(spark, df.schema, footer_ts)
+    if key is not None:
+        for k in [k for k in _READ_CACHE if k[0] != key[0] or k[1:5] == key[1:5]]:
+            del _READ_CACHE[k]
+        _READ_CACHE[key] = entry
+    return entry, df
+
+
+def read_cached(
+    spark: SparkSession,
+    path: str,
+    fmt: str = "parquet",
+    options: dict | None = None,
+    normalize: bool = False,
+    table: str = "?",
+) -> DataFrame:
+    """Load ``path`` as a freshly analyzed frame, taking its schema from
+    the shared read cache when this session has already inferred it for
+    the same files and confs (see the contract above). ``normalize``
+    applies read_table's timestamp-layout repair with the cached footer
+    probe (``table`` names the source in its log line)."""
+    options = options or {}
+    entry, df = _resolve(spark, path, fmt, options)
+    if df is None:
+        df = spark.read.format(fmt).options(**options).schema(entry.schema).load(path)
+    return _normalize(df, entry.footer_ts, (), table) if normalize else df
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one source table; normalizes event-time columns to UTC
     TIMESTAMP whether the file stores ns-int64 or timestamp[us]/NTZ.
+    Returns the shared cache's analyzed frame: one plan per (session,
+    table, files), reused by every query key.
 
     Pins the session timezone to UTC: parquet timestamps are UTC
     instants and the DuckDB oracle compares naive-UTC values — a host
@@ -176,32 +280,14 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _READ_CACHE if k[0] != app_id]:
-        del _READ_CACHE[k]
-    sig = _path_signature(path)
-    key = (app_id, id(spark), path, sig)
-    if sig is not None:
-        cached = _READ_CACHE.get(key)
-        # identity check is belt-and-braces: the strong ref in the value
-        # pins id(spark) against reuse, so a hit is always this session
-        if cached is not None and cached[0] is spark:
-            return cached[1]
-    df = spark.read.parquet(path)
-    df = normalize_frame(
-        df, path=path, ns_allowlist=_EVENT_TS_COLS.get(name, ()), table=name
-    )
-    if sig is not None:
-        # drop superseded signatures of the same (session, path) before
-        # inserting
-        for k in [
-            k
-            for k in _READ_CACHE
-            if k[0] == app_id and k[1] == id(spark) and k[2] == path
-        ]:
-            del _READ_CACHE[k]
-        _READ_CACHE[key] = (spark, df)
-    return df
+    entry, df = _resolve(spark, path, "parquet", {})
+    if entry.frame is None:
+        if df is None:
+            df = spark.read.schema(entry.schema).parquet(path)
+        entry.frame = _normalize(
+            df, entry.footer_ts, _EVENT_TS_COLS.get(name, ()), name
+        )
+    return entry.frame
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

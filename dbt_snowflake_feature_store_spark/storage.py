@@ -43,6 +43,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .sources.tables import read_cached
+
 _COMMIT_MARKER = "_FS_COMMIT"
 
 
@@ -179,7 +181,7 @@ class ParquetSnapshotFormat(TableFormat):
         hdir = self._history_dir(path)
         for d in sorted(os.listdir(hdir) if os.path.isdir(hdir) else []):
             if d.split("_", 1)[0] == f"{version:08d}":
-                return spark.read.parquet(os.path.join(hdir, d))
+                return read_cached(spark, os.path.join(hdir, d))
         raise FileNotFoundError(
             f"no retained snapshot version {version} under {path}"
         )
@@ -229,7 +231,7 @@ class ParquetSnapshotFormat(TableFormat):
     # -- interface -----------------------------------------------------
     def read(self, spark: SparkSession, path: str) -> DataFrame:
         self.recover(path)
-        return spark.read.parquet(path)
+        return read_cached(spark, path)
 
     def write_full(
         self, df: DataFrame, path: str, partition_by: list[str] | None = None
@@ -299,7 +301,7 @@ class ParquetSnapshotFormat(TableFormat):
     ) -> int:
         self.recover(path)
         if os.path.isdir(path):
-            target = spark.read.parquet(path)
+            target = read_cached(spark, path)
             kept = target.join(
                 updates.select(*keys).distinct(), on=keys, how="left_anti"
             )
@@ -307,7 +309,7 @@ class ParquetSnapshotFormat(TableFormat):
         else:
             merged = updates
         self.replace(spark, path, merged)
-        return spark.read.parquet(path).count()
+        return read_cached(spark, path).count()
 
 
 class DeltaFormat(TableFormat):

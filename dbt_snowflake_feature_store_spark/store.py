@@ -225,15 +225,26 @@ class FeatureStore:
         every source read sees UTC TIMESTAMP whether the file stores
         ns-int64 or timestamp[us]/NTZ — ADVICE-r13 medium: freshness /
         model reads previously bypassed it). Footer-probed for parquet;
-        other formats still get the dtype-driven NTZ repair."""
+        other formats still get the dtype-driven NTZ repair. Without a
+        pinned schema the read goes through the shared read cache
+        (``sources.tables.read_cached``): no inference job per read."""
         from .sources import normalize_frame
+        from .sources.tables import read_cached
 
-        if doc.get("format", "parquet") == "parquet":
+        fmt = doc.get("format", "parquet")
+        if fmt == "parquet":
             self.spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if not doc.get("schema"):
+            return read_cached(
+                self.spark,
+                doc["path"],
+                fmt,
+                doc.get("options") or {},
+                normalize=True,
+                table=doc.get("name", "?"),
+            )
         df = self._source_reader(doc).load(doc["path"])
-        probe = (
-            doc["path"] if doc.get("format", "parquet") == "parquet" else None
-        )
+        probe = doc["path"] if fmt == "parquet" else None
         return normalize_frame(df, path=probe, table=doc.get("name", "?"))
 
     def _bind_batch_sources(self) -> None:

@@ -51,11 +51,13 @@ def _source_views(fs: "FeatureStore", streaming: bool) -> list[str]:
         try:
             if streaming:
                 # streaming sources need an explicit schema: the
-                # registered one, else read it from the existing batch
-                # footprint (metadata-only read for parquet/orc)
-                schema = doc.get("schema") or fs.spark.read.format(fmt).options(
-                    **opts
-                ).load(path).schema
+                # registered one, else the batch footprint's, through
+                # the shared read cache (no inference job once known)
+                from ..sources.tables import read_cached
+
+                schema = doc.get("schema") or read_cached(
+                    fs.spark, path, fmt, opts
+                ).schema
                 df = (
                     fs.spark.readStream.format(fmt)
                     .schema(schema)
@@ -203,9 +205,6 @@ def incremental_refresh(fs: "FeatureStore", fv: "FeatureView") -> str:
                 return _incremental_merge(fs, df_plan, path, ckpt_merge, keys)
             except Exception as e2:  # merge path failed → FULL downgrade
                 raise StreamingNotSupported(str(e2)) from e2
-            finally:
-                _source_views(fs, streaming=False)
-        _source_views(fs, streaming=False)
         raise StreamingNotSupported(msg) from e
     finally:
         # restore batch views so subsequent batch reads/plans see tables

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -35,3 +36,24 @@ def fs(spark, tmp_path):
     from dbt_snowflake_feature_store_spark import FeatureStore
 
     return FeatureStore(spark, str(tmp_path / "fs_root"), name="TEST_FS")
+
+
+@pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under a unique job group and returns
+    how many Spark jobs it launched (statusTracker, after the listener
+    bus has delivered every event)."""
+    sc = spark.sparkContext
+
+    def _count(fn) -> int:
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return _count
